@@ -1,0 +1,1 @@
+"""kgp benchmark: workloads, tracing and output checks (see README.md)."""
