@@ -1,9 +1,8 @@
 """Per-operator N→4N scaling evidence for the heavy LLM-data ops
 (round-3 verdict "Next round" #1).
 
-BENCH/scaling.py covers the flagship fused KG pipeline; this harness
-covers the operators a 100 TB training-data run actually spends its
-wall-clock in — MinHash-LSH fuzzy dedup (xxhash64 production family),
+This harness covers the operators a 100 TB training-data run actually
+spends its wall-clock in — MinHash-LSH fuzzy dedup (xxhash64 production family),
 C4 span-level dedup, tf-idf keyword extraction, benchmark
 decontamination, boilerplate n-gram mining, embedding near-dup
 (sign-LSH bucketed), IVF k-means index build, integer PageRank and
@@ -12,7 +11,7 @@ via ``spark-submit --py-files kgp.zip`` from a scratch dir (the north
 rule's launch mode), local[8] (N) vs local[32] (4N).
 
 Inputs (deterministic, synthesized once, shared by every leg):
-  * pages: the SAME 2M-page parquet BENCH/scaling.py materializes
+  * pages: a 2M-page parquet materialized once
     (kgp.synth.synth_pages, 128 files) — minhash / span dedup / tfidf
     / decontamination / boilerplate run over (doc_id, text) projected
     from it.
@@ -38,8 +37,7 @@ per-op efficiency is computed WITHIN the round; 2 outer rounds; the
 reported number per op comes from the round with the smaller combined
 core-seconds for that op (the least-contaminated window). Each op is
 timed as one full action per leg — at 30-600 s per timing the ~1 s
-codegen compile is noise, so no inner repetition (unlike the flagship
-harness, whose 2-20 s timings need min-of-3).
+codegen compile is noise, so no inner repetition.
 
 Usage: python BENCH/scaling_ops.py [n_pages] [n_nodes] [n_edges]
        (defaults 2_000_000 / 8_000_000 / 32_000_000; the committed
@@ -69,9 +67,9 @@ emb_path = sys.argv[4]
 from kgp.session import get_spark
 spark = get_spark(
     "kgp-scaling-ops", cores=n_cores,
-    # tasks >> slots on both legs (same rationale as the 128-file input
-    # layout in BENCH/scaling.py); heavy shuffles at 2M rows want more
-    # granular partitions than the flagship's one-per-core.
+    # tasks >> slots on both legs (the same reason the pages input is
+    # 128 files); heavy shuffles at 2M rows want more granular
+    # partitions than one per core.
     # maxPartitionBytes: at the default 128 MB the file-combining scan
     # bin-packs the 825 MB / 128-file pages input into ~7 scan tasks,
     # STARVING the wide leg's first stage (measured: span dedup ran
@@ -330,7 +328,7 @@ def main() -> None:
                 "--master", f"local[{cores}]",
                 # the 2M-row tf table / bands table localCheckpoints
                 # live in the driver JVM in local mode — needs more
-                # heap than the flagship's 8g. 48g, not 24g: the
+                # heap than the default 8g. 48g, not 24g: the
                 # local[32] leg at 8M nodes / 32M edges exited 52
                 # (SparkExitCode.OOM) at 24g while the local[8] leg
                 # passed — 4x concurrent tasks over string-heavy
@@ -499,7 +497,7 @@ def main() -> None:
         "",
         "## Per-operator scaling (heavy LLM-data ops)",
         "",
-        f"Same protocol as the flagship (fresh JVM per leg via "
+        f"Protocol: fresh JVM per leg via "
         f"`spark-submit --py-files kgp.zip`, local[8] vs local[32], "
         f"within-round pairing over 2 rounds, per-op best round by "
         f"combined core-seconds; shuffle.partitions = 4×cores and "
@@ -507,10 +505,10 @@ def main() -> None:
         f"the default 128 MB the file-combining scan bin-packed the "
         f"input into ~7 tasks and starved the wide leg's first stage; "
         f"shuffle dirs on tmpfs so the legs are not both bottlenecked "
-        f"on the sandbox's single virtual disk). Each op is timed as "
+        f"on the host's single virtual disk. Each op is timed as "
         f"construction + one noop-sink drain (a bare count() lets "
         f"Catalyst prune aggregate output columns and under-measures)."
-        f" Inputs: the flagship's {n_pages:,}-"
+        f" Inputs: a {n_pages:,}-"
         f"page parquet; a deterministic {n_nodes:,}-node / "
         f"{n_edges:,}-edge graph (xxhash64 of the row id — identical "
         f"bytes at any parallelism). Row counts are asserted identical "
@@ -540,14 +538,16 @@ def main() -> None:
         f"Substrate control (measured by this run, pure CPU, no "
         f"Spark; median of 3 repeats {substrate['repeats']} — a "
         f"single-run divisor would violate the repo's own "
-        f"no-single-run-timings rule): 8 vs 32 single-core pinned "
+        f"no-single-run-timings rule): {substrate['widths'][0]} vs "
+        f"{substrate['widths'][1]} single-core pinned "
         f"python processes running an identical arithmetic loop take "
-        f"{substrate['sec_per_proc_8']}s vs "
-        f"{substrate['sec_per_proc_32']}s per process — this box's "
+        f"{substrate['sec_per_proc_n']}s vs "
+        f"{substrate['sec_per_proc_4n']}s per process — this box's "
         f"hardware itself delivers only "
-        f"{substrate['ceiling']:.3f} per-core throughput at width 32 "
-        f"vs width 8 (SMT siblings / host-oversubscribed vCPUs share "
-        f"execution units). That ceiling applies to EVERY 8-vs-32 "
+        f"{substrate['ceiling']:.3f} per-core throughput at width "
+        f"{substrate['widths'][1]} vs width {substrate['widths'][0]} "
+        f"(SMT siblings / host-oversubscribed vCPUs share "
+        f"execution units). That ceiling applies to EVERY N-vs-4N "
         f"comparison on this box regardless of the job; a real "
         f"cluster's 4N executors add whole sockets, memory buses, and "
         f"disks instead. The substrate-normalized column divides the "
@@ -556,23 +556,19 @@ def main() -> None:
         f"Minimum per-op efficiency: raw **"
         f"{summary['min_efficiency']:.3f}**, substrate-normalized "
         f"**{summary['min_eff_norm']:.3f}** ({worst}) — vs the "
-        f"flagship's ≥ 0.8 north rule "
+        f"≥ 0.8 north rule "
         + ("(MET raw for every op)."
            if summary["min_efficiency"] >= 0.8
            else (
                "(raw readings below 0.8 clear 0.8 once divided by "
                "the measured substrate ceiling — the shortfall is "
-               "the box, not the plan; see the shuffle-volume note. "
-               "The north rule itself is gated on the flagship "
-               "fused pipeline above, which meets it raw)."
+               "the box, not the plan; see the shuffle-volume note)."
                if summary["min_eff_norm"] >= 0.8
                else "(NOT met even substrate-normalized for the "
                     "worst op — the residual gap is attributed to "
                     "shuffle-volume contention per the note below, "
                     "but the honest record is that this op's "
-                    "normalized reading is below 0.8 on this box. "
-                    "The north rule itself is gated on the flagship "
-                    "fused pipeline above, which meets it raw)."
+                    "normalized reading is below 0.8 on this box)."
            )),
         "",
         "Shuffle-volume note: minhash and span dedup shuffle "

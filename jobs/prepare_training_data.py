@@ -69,7 +69,10 @@ def main(argv: list[str] | None = None) -> int:
                     help="C4 span-level dedup: remove duplicated"
                          " K-token blocks corpus-wide (first occurrence"
                          " kept; docs losing no block pass through"
-                         " byte-identical; default off)")
+                         " byte-identical; default off). Integral doc"
+                         " ids must lie in [0, 2^43) with fewer than"
+                         " 2^20 blocks per doc, or the run fails;"
+                         " this job's string doc ids have no bound")
     ap.add_argument("--span-hot-cap", type=int, default=None,
                     help="opt-in hot-span skew guard for"
                          " --span-dedup-tokens: spans hotter than this"

@@ -17,7 +17,7 @@ Package layout
 - ``kgp.oracle``      pure-Python pinned twin of the judged semantics
 - ``kgp.operators``   segment / ner / triples / linking / canon / dedup /
                       similarity / textstats / multimodal / skew
-- ``kgp.plans``       end-to-end pipeline with lineage + checkpoint/resume
+- ``kgp.checkpoint``  end-to-end pipeline with lineage + checkpoint/resume
 - ``kgp.streaming``   Structured Streaming wrapper (foreachBatch of stages)
 """
 

@@ -613,6 +613,12 @@ def span_dedup_flags(
     ones, so the flags table is the whole distributed cost.
     Consistency with span_dedup_stats (n_spans = rows per id,
     n_removed = rows with kept = false) is pinned in tests.
+
+    Packed-keeper bound: for an integral ``id_col`` the keeper key
+    packs (id, pos) into one BIGINT, which is a total order only for
+    ids in [0, 2^43) and fewer than 2^20 blocks per doc; a row outside
+    that raises at run time instead of picking a wrong keeper. String
+    ids keep the unpacked struct key and have no bound.
     """
     j = _span_annotated(
         _span_rows(docs, id_col, text_col, k), hot_span_cap
@@ -656,6 +662,12 @@ def span_cleaned_docs(
     already hash-partitioned on ``id_col`` from no prior shuffle, so
     this is the honest one-extra-shuffle cost of rewriting text
     in-engine (the flags variant trades it for sink-writer logic).
+
+    Packed-keeper bound: for an integral ``id_col`` the keeper key
+    packs (id, pos) into one BIGINT, which is a total order only for
+    ids in [0, 2^43) and fewer than 2^20 blocks per doc; a row outside
+    that raises at run time instead of picking a wrong keeper. String
+    ids keep the unpacked struct key and have no bound.
     """
     j = _span_annotated(
         _span_rows(docs, id_col, text_col, k), hot_span_cap

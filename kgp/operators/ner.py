@@ -9,14 +9,18 @@ entity_extraction.py:42-54), so extractors are pluggable:
 * ``mentions_relational`` — gazetteer matching as a pure DataFrame
   expression: broadcast the (tiny) gazetteer, ``locate`` on
   space-padded text. 100 % JVM/codegen; the broadcast join never
-  shuffles the pages side. This is the scale path AND the semantics
-  shared with the DuckDB oracle (strpos on the same padding).
+  shuffles the pages side. This is the one path that ships: the jobs
+  (build_kg, stream_kg), the gated queries and the benchmarks all run
+  it, and it shares its semantics with the DuckDB oracle (strpos on
+  the same padding).
 
-* ``mentions_arrow`` — the same semantics as an Arrow-batched
-  ``mapInPandas`` (vectorized pandas ``str.find`` per surface across
-  the whole batch — no per-row Python loop over texts). This is the
-  shape a real transformer/spaCy NER takes (north-rule requirement);
-  ``SpacyMentionExtractor`` plugs in when the model is importable.
+* ``mentions_arrow`` — the one Arrow seam for a model extractor: the
+  same semantics as an Arrow-batched ``mapInPandas`` (vectorized
+  pandas ``str.find`` per surface across the whole batch — no per-row
+  Python loop over texts). This is the shape a real transformer/spaCy
+  NER takes; ``SpacyMentionExtractor`` plugs in when the model is
+  importable. Kept row-for-row equal to ``mentions_relational`` by
+  tests/test_ner_triples.py.
 
 Both return the pre-cap `mentions` table:
 ``(url, surface, label, first_offset)`` with first_offset = 0-based
@@ -127,62 +131,6 @@ def mentions_arrow(
     return docs.select(id_col, text_col).mapInPandas(
         extract,
         schema="url string, surface string, label string, first_offset long",
-    )
-
-
-MENTION_ARRAY_SCHEMA = (
-    "url string, mentions array<struct<"
-    "surface:string,label:string,first_offset:bigint>>"
-)
-
-
-def mention_arrays_arrow(
-    docs: DataFrame,
-    gaz: list[tuple[str, str]] | None = None,
-    id_col: str = "url",
-    text_col: str = "extracted_text",
-) -> DataFrame:
-    """One row per doc: (url, mentions array<struct<surface,label,
-    first_offset>>) — the model-extractor UDF contract
-    (/root/reference/src/kg/base.py:4-7 returns the per-document
-    mention list; here it lands as an Arrow struct array instead of
-    exploded rows).
-
-    This is the shape kgp.plans.pipeline.cap_mention_array_col picks
-    up from: because the array stays in-row, the downstream label
-    filter + first-occurrence cap needs NO Window and NO shuffle —
-    exactly the fused-plan property of the relational gazetteer path.
-    The extraction itself is the same vectorized str.find batch loop
-    as mentions_arrow; a real model (SpacyMentionExtractor.
-    extract_batch) slots in by replacing the inner loop, returning the
-    same list-of-(surface, label, offset) per document.
-    """
-    gaz = gaz or PAGES_SURFACES
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            padded = " " + pdf[text_col].astype("string").fillna("") + " "
-            per_doc: list[list[dict]] = [[] for _ in range(len(pdf))]
-            for surface, label in gaz:
-                pos = padded.str.find(" " + surface + " ")
-                for i, p in enumerate(pos.to_numpy()):
-                    if p >= 0:
-                        per_doc[i].append(
-                            {
-                                "surface": surface,
-                                "label": label,
-                                "first_offset": int(p),
-                            }
-                        )
-            yield pd.DataFrame(
-                {
-                    "url": pdf[id_col].astype(str),
-                    "mentions": per_doc,
-                }
-            )
-
-    return docs.select(id_col, text_col).mapInPandas(
-        extract, schema=MENTION_ARRAY_SCHEMA
     )
 
 

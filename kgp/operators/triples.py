@@ -15,12 +15,11 @@ Reference: /root/reference/src/kg/gremlin_client.py:102-135 —
 
 Scale notes: the per-document cap is a collect_list aggregation with
 in-row sort/slice (map-side partial aggregation; one packed row per
-doc crosses the shuffle) — see cap_mentions. When mentions come
-straight from the in-row extractor the cap disappears entirely into
-the row (plans.pipeline.build_kg_fused). Entity-node dedup is a
-shuffle on entity_id — head entities are hot keys, but the groupBy
-does map-side partial aggregation so the skew reaching the reduce
-side is one row per (partition, key).
+doc crosses the shuffle) — see cap_mentions. Every extractor in
+kgp.operators.ner emits exploded mention rows, so this one cap serves
+them all. Entity-node dedup is a shuffle on entity_id — head entities
+are hot keys, but the groupBy does map-side partial aggregation so the
+skew reaching the reduce side is one row per (partition, key).
 """
 
 from __future__ import annotations

@@ -34,9 +34,17 @@ def test_bucketed_join_is_exchange_free(spark, tmp_path):
     side — the J2 endpoint-resolution join co-located at write time.
     The same files read as plain parquet LOSE the layout and shuffle,
     proving the bucket metadata (not luck) removes the exchanges."""
-    from kgp.plans.pipeline import build_kg_fused
+    from kgp.operators.ner import gazetteer_df, mentions_relational
+    from kgp.operators.segment import extract_docs
+    from kgp.operators.triples import (
+        build_entities,
+        build_triples,
+        cap_mentions,
+    )
 
-    triples, entities = build_kg_fused(synth_pages(spark, 80))
+    docs = extract_docs(synth_pages(spark, 80))
+    capped = cap_mentions(mentions_relational(docs, gazetteer_df(spark)))
+    triples, entities = build_triples(capped), build_entities(capped)
     cat = Catalog(str(tmp_path))
     cat.write_bucketed(triples, "triples_b", 8, ["obj"])
     cat.write_bucketed(entities, "entities_b", 8, ["entity_id"])

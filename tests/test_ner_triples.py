@@ -150,3 +150,56 @@ def test_normalize_entity_id_py_full_unicode_parity(spark):
     )
     rows = {(r["a"], r["b"]) for r in null_df.collect()}
     assert rows == {(None, None), ("entity:acme_corp", "entity:acme_corp")}
+
+
+def _shipped_kg(spark, pages, gaz=None):
+    docs = extract_docs(pages)
+    capped = cap_mentions(mentions_relational(docs, gazetteer_df(spark, gaz)))
+    return build_triples(capped), build_entities(capped)
+
+
+def test_cap_filters_labels_before_cap_and_breaks_offset_ties(spark):
+    """Filter-before-cap + pinned (first_offset, surface) order on
+    hand-built mention rows. u1: 12 entity mentions behind a decoy
+    label at offset 0 — the decoy must not consume a cap slot
+    (gremlin_client.py:102-135: label filter precedes the cap), and
+    the offset-7 tie breaks by surface. u2: the tie sits on the cap
+    boundary, so the surface decides which mention survives."""
+    rows = [("u1", "noise", "EVENT", 0)] + [
+        ("u1", f"e{i:02d}", "ORG", 7 if i < 2 else 10 + i)
+        for i in range(12)
+    ]
+    rows += [("u2", "noise", "EVENT", 0)] + [
+        ("u2", f"m{i}", "PERSON", 1 + i) for i in range(9)
+    ]
+    rows += [("u2", "zz", "GPE", 99), ("u2", "aa", "GPE", 99)]
+    mentions = spark.createDataFrame(
+        rows, "url string, surface string, label string, first_offset long"
+    )
+    got: dict[str, list[tuple[int, str]]] = {}
+    for r in cap_mentions(mentions).collect():
+        got.setdefault(r["url"], []).append((r["first_offset"], r["surface"]))
+    u1 = [s for _, s in sorted(got["u1"])]
+    assert u1 == [f"e{i:02d}" for i in range(10)]  # capped, decoy excluded
+    u2 = {s for _, s in got["u2"]}
+    assert u2 == {f"m{i}" for i in range(9)} | {"aa"}
+
+
+def test_all_filtered_gazetteer_yields_nothing(spark):
+    """A gazetteer whose labels are all outside ENTITY_LABELS gives
+    zero triples and zero entities — including one whose surfaces do
+    occur in the text, so the label filter is what empties it."""
+    pages = synth_pages(spark, 40)
+    relabeled = [(s, "EVENT") for s, _ in PAGES_SURFACES]
+    docs = extract_docs(pages)
+    assert mentions_relational(docs, gazetteer_df(spark, relabeled)).count()
+    for gaz in ([("decoy", "EVENT")], relabeled):
+        triples, entities = _shipped_kg(spark, pages, gaz)
+        assert triples.count() == 0 and entities.count() == 0
+
+
+def test_triples_partition_invariance(spark):
+    a, _ = _shipped_kg(spark, synth_pages(spark, 200, partitions=1))
+    b, _ = _shipped_kg(spark, synth_pages(spark, 200, partitions=11))
+    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+    assert a.count() > 0

@@ -287,10 +287,11 @@ def test_substrate_control_smoke():
 
     out = substrate_control(repeats=1, loop_iters=200_000)
     assert set(out) == {
-        "sec_per_proc_8", "sec_per_proc_32", "ceiling", "repeats"
+        "widths", "sec_per_proc_n", "sec_per_proc_4n", "ceiling", "repeats"
     }
     assert 0 < out["ceiling"] <= 1.0
     assert len(out["repeats"]) == 1
+    assert out["widths"][1] == len(os.sched_getaffinity(0))
 
 
 def test_scaling_ops_imports_shared_substrate():
